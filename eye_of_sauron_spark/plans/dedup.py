@@ -252,6 +252,9 @@ def _band_sigs(hs, n_bands: int = _MINHASH_BANDS):
     so a coarser layout's bands are unions of a finer layout's bands
     whenever the coarse count divides the fine count — the nesting
     the band-count ladder's monotonicity proof rides."""
+    assert _MINHASH_K % n_bands == 0, (
+        f"{n_bands} bands do not divide {_MINHASH_K} minhashes"
+    )
     rows_per_band = _MINHASH_K // n_bands
 
     def mh(seed: int):
@@ -784,6 +787,9 @@ def dedup_minhash_band_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _rung_flag(n_bands: int) -> F.Column:
+        assert _MINHASH_K % n_bands == 0, (
+            f"rung of {n_bands} bands does not divide {_MINHASH_K} minhashes"
+        )
         width = _MINHASH_K // n_bands
         full = (1 << width) - 1
         hit = None

@@ -536,25 +536,31 @@ def _recall_oracle(ann_oracle: str) -> str:
     """
 
 
-def _recall_of(spark: SparkSession, sf_dir: str, ann_fn) -> DataFrame:
-    """Per-query recall@k: |ANN top-k ∩ exact top-k| / k. The exact
-    side is the brute-force scan (the expensive audit baseline — at
-    100 TB this runs over a SAMPLED query set, which is exactly what
-    _QUERY_FILTER is); the join/agg sides are O(queries x k) rows, so
-    everything after the two scans is broadcast-sized by
-    construction. The exact side is IDENTICAL for every recall
-    contract over a given corpus, so it is memo-checkpointed once per
-    session (queries x k rows — broadcast-sized) instead of re-running
-    the brute-force scan once per audited tier."""
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact brute-force top-k (query_id, cand_id) that every
+    recall contract and ladder audits against. It is identical for
+    every audited tier over a given corpus, so it is memo-checkpointed
+    once per session (queries x k rows, broadcast-sized) instead of
+    re-running the brute-force scan once per tier. At 100 TB this
+    runs over a SAMPLED query set, which is exactly what _QUERY_FILTER
+    is."""
     from ..functions.materialize import memo_checkpoint
 
-    exact = memo_checkpoint(
+    return memo_checkpoint(
         spark,
         ("recall_exact_topk", os.path.realpath(sf_dir), _RECALL_K),
         lambda: similarity_topk_cosine(spark, sf_dir)
         .filter(F.col("rank") <= _RECALL_K)
         .select("query_id", "cand_id"),
     )
+
+
+def _recall_of(spark: SparkSession, sf_dir: str, ann_fn) -> DataFrame:
+    """Per-query recall@k: |ANN top-k ∩ exact top-k| / k against the
+    shared :func:`_exact_topk`. The join/agg sides are O(queries x k)
+    rows, so everything after the two scans is broadcast-sized by
+    construction."""
+    exact = _exact_topk(spark, sf_dir)
     ann = (
         ann_fn(spark, sf_dir)
         .filter(F.col("rank") <= _RECALL_K)
@@ -615,31 +621,19 @@ def _ladder_of(
     spark: SparkSession, sf_dir: str, dial_col: str, rung_anns
 ) -> DataFrame:
     """Shared dial-ladder plan over the prepared ``(rung, ann_df)``
-    pairs. The rung ANN relations are built by each ladder from ONE
-    materialized shared pass (r17 optimization); every rung still
-    runs the registered ranking tail byte-for-byte, and the
-    shared-pass derivations are property-pinned
-    (tests/test_properties.py), so the middle-rung row-identity pins
-    keep holding by construction.
+    pairs. Each ladder builds its rung ANN relations from ONE
+    materialized shared pass; every rung still runs the registered
+    ranking tail byte-for-byte, and the shared-pass derivations are
+    property-pinned (tests/test_properties.py), so the middle-rung
+    row-identity pins keep holding by construction.
 
-    r18 optimization (guide §2.4): the per-rung :func:`_recall_of`
-    calls planned one exact-side join + one aggregate PER RUNG, then
-    unioned three aggregate outputs — 3 joins, 3 shuffles, 3 codegen
-    units for what is one relation. The rung tag is now part of the
-    join key instead: the session-memoized exact top-k explodes to
-    (rung, query, cand) — O(rungs x queries x k) rows, still
-    broadcast-sized — the tagged rung ANN union joins once, and ONE
-    (rung, query) aggregate emits every ladder row. Same rows, same
-    per-rung math, one exchange."""
-    from ..functions.materialize import memo_checkpoint
-
-    exact = memo_checkpoint(
-        spark,
-        ("recall_exact_topk", os.path.realpath(sf_dir), _RECALL_K),
-        lambda: similarity_topk_cosine(spark, sf_dir)
-        .filter(F.col("rank") <= _RECALL_K)
-        .select("query_id", "cand_id"),
-    )
+    The rung tag is part of the join key: the shared
+    :func:`_exact_topk` explodes to (rung, query, cand), O(rungs x
+    queries x k) rows and still broadcast-sized; the tagged rung ANN
+    union joins it once, and ONE (rung, query) aggregate emits every
+    ladder row. Same per-rung math as :func:`_recall_of`, one
+    exchange."""
+    exact = _exact_topk(spark, sf_dir)
     ann = None
     for r_, ann_df in rung_anns:
         t = ann_df.filter(F.col("rank") <= _RECALL_K).select(

@@ -5,12 +5,25 @@ implicit schemas (reference src/params.py:9-17, src/utils.py:24-28);
 here every dataset is a parquet-backed DataFrame with an explicit
 schema, so Catalyst gets pushdown / pruning / stats for free.
 
-At cluster scale these reads would point at object-store prefixes; the
-scan path (vectorized parquet reader, predicate pushdown, partition
-pruning) is identical.
+Reading a parquet file with no schema launches a Spark job that reads
+its footer. Each fixture file pays that schema-inference job once per
+process: the inferred ``StructType`` is kept, and every later load
+passes it explicitly (``spark.read.schema(...)``), which launches no
+job. Only schemas are kept, never DataFrames, so every load still
+lists its file and sees its current contents. The key is the file's
+real path, mtime and size plus the two confs that shape inference, so
+a rewritten file or a flipped conf is inferred afresh and no result
+depends on which query loaded a table first.
+
+At cluster scale these reads would point at object-store prefixes (the
+schema key would then use the object's metadata instead of a local
+``os.stat``); the scan path (vectorized parquet reader, predicate
+pushdown, partition pruning) is identical.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +41,32 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (realpath, st_mtime_ns, st_size, *_INFERENCE_CONFS values) -> schema
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    first read of this file (under these confs) in the process. Two
+    threads racing on a first read both infer and store equal
+    schemas, so the unlocked check-then-set is harmless."""
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(c, None) for c in _INFERENCE_CONFS
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,13 +95,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # reader so oracle comparisons see identical values.
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # integer division: ns values (~1.7e18) exceed double's 53-bit
             # mantissa, so a float divide would corrupt the timestamp
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -206,6 +206,18 @@ def test_ngram_df_cutoff_drops_stop_shingles_keeps_neardups(spark):
     assert got == {(10_000, 10_001)}
 
 
+def test_minhash_bands_must_divide_k(spark):
+    # a band count that does not divide the minhash count would drop
+    # trailing minhashes; it must fail while the plan is built
+    from pyspark.sql import functions as F
+
+    from eye_of_sauron_spark.plans.dedup import _MINHASH_K, _band_sigs
+
+    _band_sigs(F.col("hs"), _MINHASH_K)  # dividing counts build fine
+    with pytest.raises(AssertionError, match="do not divide"):
+        _band_sigs(F.col("hs"), 3)
+
+
 def test_simhash_no_degenerate_bands(spark, sf_dir):
     # Degenerate-band detector: with a 32-bit token hash, bits 32-63 of
     # the "64-bit" signature were constant 0, so the upper 4 of 8 bands

@@ -1,17 +1,23 @@
 """Source-contract tests: the Kafka reader surface (pinned against a
 golden fixture — no broker ships in this container, so a typo in the
-option dict or value schema would otherwise ship silently) and the
-A15 catalog/checkpoint lifecycle."""
+option dict or value schema would otherwise ship silently), the A15
+catalog/checkpoint lifecycle, and the fixture loader's schema reuse."""
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import json
 import os
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from eye_of_sauron_spark.sources import catalog
+from eye_of_sauron_spark.sources import TABLES, catalog, load_table
 from eye_of_sauron_spark.sources.streams import (
     FRAME_MESSAGE_SCHEMA,
     decode_frame_messages,
@@ -168,3 +174,99 @@ def test_encode_decode_frame_records_roundtrip(spark):
     assert rows["3_41"]["original_dtype"] == "|u1"
     assert rows["3_41"]["original_shape"] == [4]
     assert rows["3_41"]["timestamp"] == pytest.approx(1723500000.25)
+
+
+# ------------------------------------------------------- schema reuse
+
+_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn launched). Jobs reach the status
+    tracker through the asynchronous listener bus, so a fence job is
+    run after fn and awaited first: once it is visible, every job fn
+    started is too."""
+    sc = spark.sparkContext
+    group = f"schema-reuse-{next(_GROUPS)}"
+    with _job_group(sc, group):
+        out = fn()
+    with _job_group(sc, group + "|fence"):
+        sc.parallelize([0], 1).count()
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "|fence"):
+        assert time.monotonic() < deadline, "fence job never reached the tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def _row_hash(df):
+    """(row count, order-independent sum of per-row xxhash64)."""
+    r = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return r["n"], r["h"]
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_second_load_reuses_inferred_schema(spark, sf_dir, name):
+    first = load_table(spark, sf_dir, name)
+    second, jobs = _jobs_run_by(spark, lambda: load_table(spark, sf_dir, name))
+    assert jobs == 0
+    assert second.schema == first.schema
+    if name == "events":
+        assert isinstance(second.schema["ts"].dataType, T.TimestampType)
+    assert _row_hash(second) == _row_hash(first)
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()),
+                  "r_name": ["AFRICA", "AMERICA"]}),
+        path,
+    )
+    old, jobs = _jobs_run_by(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs >= 1  # a file never read before is inferred
+    assert old.columns == ["r_regionkey", "r_name"]
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0], pa.int64()),
+                  "r_comment": ["rewritten"]}),
+        path,
+    )
+    new, jobs = _jobs_run_by(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs >= 1
+    assert new.schema == T.StructType([
+        T.StructField("r_regionkey", T.LongType()),
+        T.StructField("r_comment", T.StringType()),
+    ])
+    assert [tuple(r) for r in new.collect()] == [(0, "rewritten")]
+
+
+def test_nanos_events_reuse_schema(spark, tmp_path):
+    # a TIMESTAMP(NANOS) events.ts infers as LONG under nanosAsLong;
+    # the reused LONG schema must read and truncate to micros the same
+    pq.write_table(
+        pa.table({"event_id": pa.array([1], pa.int64()),
+                  "ts": pa.array([1723500000123456789], pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    first = load_table(spark, str(tmp_path), "events")
+    second, jobs = _jobs_run_by(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert isinstance(second.schema["ts"].dataType, T.TimestampType)
+    rows = second.collect()
+    assert rows == first.collect()
+    assert rows[0]["ts"].microsecond == 123456
