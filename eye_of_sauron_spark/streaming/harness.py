@@ -10,6 +10,12 @@ writers below control explicitly.
 
 Swap ``readStream.format("kafka")`` in for production; every
 transformation downstream is source-agnostic.
+
+Every drain writes a throwaway checkpoint inside
+``ephemeral_checkpoint``, which scopes the FileSystem-based checkpoint
+file manager: without libhadoop the default FileContext manager forks
+a ``readlink`` per checkpoint-file rename, and that process spawning
+was most of a replay's per-batch commit time.
 """
 
 from __future__ import annotations
@@ -25,33 +31,57 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 _CKPT_CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @contextmanager
-def ephemeral_checkpoint(spark: SparkSession):
-    """Scope-disable per-file checkpoint checksums (Spark 4.1 default:
-    every offset/commit/state-delta write also writes a checksum
-    companion file through a 2-thread handoff pool). The integrity
-    feature exists to detect corruption in LONG-LIVED checkpoints on
-    remote storage; the replay harness's checkpoints are per-invocation
-    temp dirs deleted seconds after the drain, so the companion writes
-    are pure fixed cost — ~10% of an 8-batch replay's wall, measured
-    (SCALE.md "Replay-family fixed-wall profile, round 15"). The
-    session default stays untouched for any long-lived stream a user
-    starts. Restored on exit; reads of mixed checkpoints remain valid
-    either way (skipCreationIfFileMissingChecksum defaults true).
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set each session conf in ``confs`` for the duration of the
+    block. On every exit path (normal, exception, nested) each key is
+    restored to the value it held before, or unset if it was unset.
 
-    SERIAL-ONLY, same contract as replay._scoped_shuffle: the conf is
-    session-wide while the drain runs."""
-    prev = spark.conf.get(_CKPT_CHECKSUM_KEY, None)
-    spark.conf.set(_CKPT_CHECKSUM_KEY, "false")
+    SERIAL-ONLY: the confs are session-wide while the block runs, so
+    a query planned concurrently in the same SparkSession would see
+    them. The entry point, the bench and the tests run queries one at
+    a time."""
+    conf = spark.conf
+    prev = {k: conf.get(k, None) for k in confs}
     try:
+        for k, v in confs.items():
+            conf.set(k, v)
         yield
     finally:
-        if prev is not None:
-            spark.conf.set(_CKPT_CHECKSUM_KEY, prev)
-        else:
-            spark.conf.unset(_CKPT_CHECKSUM_KEY)
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+
+
+def ephemeral_checkpoint(spark: SparkSession):
+    """Scope the cheap write path for a THROWAWAY checkpoint (a temp
+    dir deleted seconds after the drain):
+
+    - checksums off: Spark 4.1 writes a companion file per offset,
+      commit and state-delta file; the integrity check is for
+      long-lived checkpoints on remote storage;
+    - ``FileSystemBasedCheckpointFileManager``: the default
+      FileContext manager renames each temp checkpoint file through
+      ``FileContext.rename``, whose ``FileUtil.readLink`` forks a
+      ``readlink`` process when libhadoop is absent (creates fork
+      ``chmod``); an 8-batch stateful drain forked ~2,000 processes.
+      ``FileSystem.rename`` on ``file:`` is ``File.renameTo``.
+
+    Both write the same checkpoint format, so either setting recovers
+    it. The session defaults stay untouched for a user's long-lived
+    stream on HDFS or object storage."""
+    return scoped_conf(
+        spark, {_CKPT_CHECKSUM_KEY: "false", _CKPT_MANAGER_KEY: _FS_CKPT_MANAGER}
+    )
 
 
 def write_microbatch_files(

@@ -18,7 +18,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +31,7 @@ from .harness import (
     ephemeral_checkpoint,
     file_stream,
     run_to_memory,
+    scoped_conf,
     staged_microbatch_log,
 )
 from .joins import clicks_to_errors_stream_join
@@ -347,9 +347,14 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_batches = _CD_FRAMES // _CD_SPAN
     work = tempfile.mkdtemp(prefix="change_detect_replay_")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    prev_cl = spark.conf.get(_CD_CHANGELOG_KEY, None)
+    # the tws path needs the RocksDB store, with per-batch changelog
+    # deltas (session.py's rocksdb setting); results are
+    # provider-independent
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": "org.apache.spark."
+        "sql.execution.streaming.state.RocksDBStateStoreProvider",
+        _CD_CHANGELOG_KEY: "true",
+    } if _has_protobuf() else {}
     try:
         in_dir = staged_microbatch_log(
             ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
@@ -359,63 +364,25 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = file_stream(
             spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
         )
-        if _has_protobuf():
-            # the tws path requires the RocksDB store; scoped to this
-            # run, restored below (results are provider-independent)
-            spark.conf.set(
-                key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            # per-batch deltas instead of full RocksDB snapshot sync —
-            # the same changelog setting session.py documents for the
-            # rocksdb state_store; O(changed keys) at scale. Only
-            # reached on the tws path (r15 note: protobuf left the
-            # sandbox between rounds, so the applyInPandasWithState
-            # fallback currently runs and this branch is pytest-pinned
-            # rather than driver-exercised).
-            spark.conf.set(_CD_CHANGELOG_KEY, "true")
-        with _scoped_shuffle(spark, _CD_CAMERAS):
+        with scoped_conf(spark, rocksdb), _scoped_shuffle(spark, _CD_CAMERAS):
             emitted = run_to_memory(
                 drop_unchanged_frames(stream),
                 f"change_detect_{uuid.uuid4().hex[:8]}",
                 f"{work}/ckpt",
             )
     finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        elif _has_protobuf():
-            spark.conf.unset(key)
-        if prev_cl is not None:
-            spark.conf.set(_CD_CHANGELOG_KEY, prev_cl)
-        elif _has_protobuf():
-            spark.conf.unset(_CD_CHANGELOG_KEY)
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select("camera", "frame_num", "payload_hash")
 
 
 # ------------------------------------------------------- stream-stream
 
-@contextmanager
 def _scoped_shuffle(spark: SparkSession, n: int):
     """Temporarily size the stateful shuffle for a replay's own scale
     (fresh checkpoint per invocation, so the state partitioning is
-    per-run); restores the session conf on exit.
-
-    SERIAL-ONLY: this mutates the session-wide shuffle-partition conf
-    for the duration of the replay, so any query planned concurrently
-    in the same SparkSession would silently get the replay's tiny
-    partition count. The driver/bench/pytest harnesses all run
-    queries serially; if concurrent execution ever appears, scope the
-    setting per-query (session clone or stream-level option)
-    instead."""
-    conf = spark.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
+    per-run); SERIAL-ONLY and restored on exit, like every
+    ``scoped_conf``."""
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _time_sliced(df: DataFrame, n: int) -> DataFrame:

@@ -220,42 +220,86 @@ def test_memo_checkpoint_drops_stale_session_slots(spark):
         drain_session(spark)
 
 
-def test_ephemeral_checkpoint_scopes_and_restores(spark):
-    """The checksum-disable is a SCOPED conf: off inside the context,
-    restored to whatever held before on every exit path (set value,
-    default/unset, nesting, exception)."""
+def _ckpt_manager_class(spark, path: str) -> str:
+    """The checkpoint file manager a stream started now would get."""
+    jvm = spark.sparkContext._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return (
+        mgr.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(path),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        .getClass()
+        .getName()
+    )
+
+
+def test_ephemeral_checkpoint_scopes_and_restores(spark, tmp_path):
+    """The checksum-disable and the FileSystem-based checkpoint manager
+    are SCOPED confs: set inside the context, restored to whatever
+    held before on every exit path (set value, default/unset, nesting,
+    exception)."""
     from eye_of_sauron_spark.streaming.harness import (
         _CKPT_CHECKSUM_KEY,
+        _CKPT_MANAGER_KEY,
+        _FS_CKPT_MANAGER,
         ephemeral_checkpoint,
     )
 
-    default = spark.conf.get(_CKPT_CHECKSUM_KEY)  # 4.1 default: true
-    with ephemeral_checkpoint(spark):
+    def scoped():
         assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-        with ephemeral_checkpoint(spark):  # nested: still off
-            assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-        assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-    assert spark.conf.get(_CKPT_CHECKSUM_KEY) == default
+        assert spark.conf.get(_CKPT_MANAGER_KEY) == _FS_CKPT_MANAGER
 
+    default = spark.conf.get(_CKPT_CHECKSUM_KEY)  # 4.1 default: true
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+    assert _ckpt_manager_class(spark, str(tmp_path)) != _FS_CKPT_MANAGER
+    with ephemeral_checkpoint(spark):
+        scoped()
+        assert _ckpt_manager_class(spark, str(tmp_path)) == _FS_CKPT_MANAGER
+        with ephemeral_checkpoint(spark):  # nested: still scoped
+            scoped()
+        scoped()
+    assert spark.conf.get(_CKPT_CHECKSUM_KEY) == default
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None, "must unset"
+    assert _ckpt_manager_class(spark, str(tmp_path)) != _FS_CKPT_MANAGER
+
+    # exception exit: unset keys are unset again
+    try:
+        with ephemeral_checkpoint(spark):
+            scoped()
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+
+    # exception exit: set keys get their own values back
+    fc = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
     spark.conf.set(_CKPT_CHECKSUM_KEY, "true")
+    spark.conf.set(_CKPT_MANAGER_KEY, fc)
     try:
         try:
             with ephemeral_checkpoint(spark):
-                assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
+                scoped()
                 raise RuntimeError("boom")
         except RuntimeError:
             pass
         assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "true"
+        assert spark.conf.get(_CKPT_MANAGER_KEY) == fc
+        assert _ckpt_manager_class(spark, str(tmp_path)) == fc
     finally:
         spark.conf.unset(_CKPT_CHECKSUM_KEY)
+        spark.conf.unset(_CKPT_MANAGER_KEY)
 
 
 def test_io_sentinel_probe_restores_session_state(spark):
     """The bench-window IO probe (tools/sentinel_probe.py::io_probe)
     drains a checkpointed micro-stream on the SHARED session, so it
     carries the same SERIAL-ONLY restore-on-exit contract as the
-    replay family (VERDICT r16 #6): shuffle-partition and
-    checkpoint-checksum confs restored, the memory-sink temp view
+    replay family: shuffle-partition, checkpoint-checksum and
+    checkpoint-manager confs restored, the memory-sink temp view
     dropped, and the throwaway checkpoint dir gone — while the drain
     itself returns a positive wall."""
     import glob
@@ -268,6 +312,8 @@ def test_io_sentinel_probe_restores_session_state(spark):
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     checksum_key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     checksum_before = spark.conf.get(checksum_key)
+    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
+    manager_before = spark.conf.get(manager_key, None)
     views_before = {v.name for v in spark.catalog.listTables()}
     # snapshot, don't glob-assert-empty: the shared tempdir may hold
     # leftovers from a SIGKILLed probe process that are not this
@@ -280,6 +326,7 @@ def test_io_sentinel_probe_restores_session_state(spark):
 
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before
     assert spark.conf.get(checksum_key) == checksum_before
+    assert spark.conf.get(manager_key, None) == manager_before
     views_after = {v.name for v in spark.catalog.listTables()}
     assert not {
         v for v in views_after - views_before if v.startswith("io_sentinel_")

@@ -364,6 +364,53 @@ def test_stream_drop_duplicates_within_watermark(spark, sf_dir, tmp_path):
     assert got.select("event_id").distinct().count() == events.count()
 
 
+def test_checkpoint_recovers_across_file_managers(spark, tmp_path):
+    """A checkpoint written by run_to_memory (the FileSystem-based
+    checkpoint manager scoped by ephemeral_checkpoint) is resumed by
+    a query started outside that scope, on the session's default
+    manager: the dedup state and source log recover, so the output is
+    exactly-once and no batch is reprocessed."""
+    from eye_of_sauron_spark.streaming.harness import _CKPT_MANAGER_KEY
+    from eye_of_sauron_spark.streaming.replay import _link_batch_files
+
+    # batch i holds keys 3i..3i+5, so every batch re-delivers half of
+    # the previous one, including across the restart (batch 1 -> 2)
+    staged = str(tmp_path / "staged")
+    write_microbatch_files(
+        spark,
+        [spark.range(3 * i, 3 * i + 6).select(F.col("id").alias("k")) for i in range(4)],
+        staged,
+    )
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+
+    def deduped():
+        return file_stream(spark, in_dir, "k BIGINT").dropDuplicates(["k"])
+
+    _link_batch_files(staged, in_dir, 0, 2)
+    first = [r.k for r in run_to_memory(deduped(), "xmgr_first", ckpt).collect()]
+    assert sorted(first) == list(range(9))
+
+    _link_batch_files(staged, in_dir, 2, 4)
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None  # session default
+    # a memory sink only recovers in complete mode; foreachBatch
+    # recovers in append mode and reports each batch id it runs
+    ran = []
+    try:
+        (
+            deduped().writeStream.foreachBatch(
+                lambda df, bid: ran.append((bid, [r.k for r in df.collect()]))
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.catalog.dropTempView("xmgr_first")
+    assert [bid for bid, _ in ran] == [2, 3], ran
+    assert sorted(k for _, ks in ran for k in ks) == list(range(9, 15))
+
+
 def test_observed_latency_metrics_listener(spark, sf_dir, event_stream_dir, event_schema, tmp_path):
     """A8 analog: latency derived in-plan, aggregates computed by
     observe() inside the running query, delivered per micro-batch via
